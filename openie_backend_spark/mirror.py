@@ -15,24 +15,28 @@ the raw pages, so the comparison covers Arrow batching, shuffles,
 window caps and joins — everything except the shared pure-Python NLP
 core, which the parity harness gates separately.
 
-Cache invalidation: the cache directory name embeds a hash of the NLP
-and extractor sources, so changing the confidence model or the tagger
-regenerates the mirrors automatically.
+Cache invalidation: the cache directory is a fixed path (the oracle SQL
+embeds it, so it must not move) holding a ``VERSION`` stamp, a hash of
+the NLP and extractor sources. Changing the confidence model or the
+tagger makes the stamp stale, and the next ``ensure`` rebuilds the
+mirrors and swaps them into place (``stamped_dir``).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 import pandas as pd
 
-# Corpus cache is owned by synth.py (source-hash + n_pages keyed dir,
-# race-safe): mirror and __spark_entry__ share synth.ensure_corpus().
+# Corpus cache is owned by synth.py (n_pages keyed dir, stamped like
+# the mirror cache): mirror and __spark_entry__ share
+# synth.ensure_corpus().
 
 _VERSIONED_SOURCES = [
     "nlp/chunker.py", "nlp/reverb.py", "nlp/stemmer.py", "nlp/nary.py",
-    "nlp/lexicon.py", "nlp/tag_lexicon.py", "nlp/confidence.py",
+    "nlp/lexicon.py", "nlp/confidence.py",
     "nlp/perceptron.py", "nlp/tagger_model.json.gz",
     "nlp/chunker_model.json.gz",
     "operators/extract.py", "operators/nary.py", "operators/multimodal.py",
@@ -51,8 +55,50 @@ def source_version() -> str:
     return h.hexdigest()[:10]
 
 
+def _read_stamp(path: str) -> str | None:
+    try:
+        with open(os.path.join(path, "VERSION")) as fh:
+            return fh.read()
+    except OSError:
+        return None
+
+
+def stamped_dir(path: str, build) -> str:
+    """Return ``path`` once it holds a build of the current
+    ``source_version()``. On a missing or stale ``VERSION`` stamp,
+    ``build(tmp)`` fills a ``<path>.tmp.<pid>`` sibling, the stamp is
+    written last and the sibling is swapped into place, so the path
+    never changes and a stamped directory is always complete. A
+    concurrent builder that swaps in first wins; the loser discards
+    its copy."""
+    version = source_version()
+    if _read_stamp(path) == version:
+        return path
+    tmp = f"{path}.tmp.{os.getpid()}"
+    stale = f"{path}.stale.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, "VERSION"), "w") as fh:
+            fh.write(version)
+        if _read_stamp(path) != version:
+            try:
+                os.rename(path, stale)
+            except OSError:
+                pass  # absent, or a concurrent builder moved it
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                pass  # a concurrent builder swapped its copy in first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(stale, ignore_errors=True)
+    return path
+
+
 def cache_dir() -> str:
-    return f"/tmp/openie_oracle_cache_{source_version()}"
+    return "/tmp/openie_oracle_cache"
 
 
 def extractions_pdf(pages: pd.DataFrame) -> pd.DataFrame:
@@ -129,13 +175,27 @@ def _docs_as_pages(sf_dir: str) -> pd.DataFrame:
     )
 
 
+def _build_synth_mirrors(out_dir: str, synth_dir: str) -> None:
+    pages = pd.read_parquet(os.path.join(synth_dir, "pages.parquet"))
+    ext = extractions_pdf(pages)
+    ext.to_parquet(os.path.join(out_dir, "ext_synth.parquet"), index=False)
+    instance_dedup_pdf(ext).to_parquet(
+        os.path.join(out_dir, "inst_dedup_synth.parquet"), index=False)
+    nary_pdf(pages).to_parquet(
+        os.path.join(out_dir, "nary_synth.parquet"), index=False)
+    mm_features_pdf().to_parquet(
+        os.path.join(out_dir, "mm_features.parquet"), index=False)
+
+
 def ensure(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
-    """Materialize all oracle inputs (idempotent). Returns paths."""
+    """Materialize all oracle inputs (idempotent). Returns paths. The
+    synth-corpus mirrors are built with the stamped directory; the
+    per-scale ``documents`` extractions are added to it on first use."""
     from openie_backend_spark import synth
 
-    d = cache_dir()
-    os.makedirs(d, exist_ok=True)
     synth_cache = synth.ensure_corpus()
+    d = stamped_dir(cache_dir(),
+                    lambda tmp: _build_synth_mirrors(tmp, synth_cache))
 
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     paths = {
@@ -147,15 +207,7 @@ def ensure(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
         "synth_dir": synth_cache,
     }
     if not os.path.exists(paths["ext_docs"]):
-        extractions_pdf(_docs_as_pages(sf_dir)).to_parquet(paths["ext_docs"], index=False)
-    if not (os.path.exists(paths["ext_synth"]) and os.path.exists(paths["inst_dedup"])):
-        pages = pd.read_parquet(os.path.join(synth_cache, "pages.parquet"))
-        ext = extractions_pdf(pages)
-        ext.to_parquet(paths["ext_synth"], index=False)
-        instance_dedup_pdf(ext).to_parquet(paths["inst_dedup"], index=False)
-    if not os.path.exists(paths["nary_synth"]):
-        pages = pd.read_parquet(os.path.join(synth_cache, "pages.parquet"))
-        nary_pdf(pages).to_parquet(paths["nary_synth"], index=False)
-    if not os.path.exists(paths["mm_features"]):
-        mm_features_pdf().to_parquet(paths["mm_features"], index=False)
+        tmp = f"{paths['ext_docs']}.tmp.{os.getpid()}"
+        extractions_pdf(_docs_as_pages(sf_dir)).to_parquet(tmp, index=False)
+        os.replace(tmp, paths["ext_docs"])
     return paths

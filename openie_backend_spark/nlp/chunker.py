@@ -3,13 +3,14 @@ for raw web-page text.
 
 The reference runs OpenNLP models inside a map-only Hadoop job
 (``hadoop/.../ScoobiSentenceChunker.scala:19,35-52``, one lazy model
-instance per JVM). Shipping OpenNLP's binary models is out of scope
-here, so this module provides a deterministic rule-based
-tokenizer/tagger/chunker with the same *interface* (three aligned
-layers). Accuracy is tuned for the deterministic synthetic corpus
-(``openie_backend_spark/synth.py``) and common web-English; for the
-golden-fixture parity path the layers are given, so extractor parity
-does not depend on this tagger (SURVEY.md §7.4-1).
+instance per JVM). Here the POS and chunk layers come from the two
+averaged-perceptron models shipped beside this module
+(``nlp/perceptron.py``, trained by ``scripts/train_tagger.py`` on the
+reference's tagged layers), also loaded once per process. The models
+are required: a missing model file raises, there is no fallback
+tagger. The output has the reference's interface (three aligned
+layers); for the golden-fixture parity path the layers are given, so
+extractor parity does not depend on this tagger (SURVEY.md §7.4-1).
 
 Pure Python; wrapped once-per-executor inside the Arrow-batched UDFs of
 ``openie_backend_spark.operators.extract``.
@@ -18,8 +19,6 @@ Pure Python; wrapped once-per-executor inside the Arrow-batched UDFs of
 from __future__ import annotations
 
 import re
-
-from openie_backend_spark.nlp.tag_lexicon import TAG_LEXICON
 
 # The exact character set Python's \\s / str.strip() treat as
 # whitespace, spelled out so the JVM regexes in operators/extract.py
@@ -38,62 +37,7 @@ _SENT_SPLIT = re.compile(rf"(?<=[.!?]){_WS_CLASS}+(?=[A-Z\"'(0-9])")
 _TOKEN = re.compile(
     r"n't|'s|'re|'ve|'ll|'d|'m|[A-Za-z]+(?:[-.][A-Za-z]+)*\.?|\$|[0-9][0-9,.%-]*|[^\sA-Za-z0-9]"
 )
-_NUM_RE = re.compile(r"[0-9][0-9,.%-]*")
-
-# closed-class lexicon
-_LEX = {
-    "the": "DT", "a": "DT", "an": "DT", "this": "DT", "that": "DT",
-    "these": "DT", "those": "DT", "each": "DT", "every": "DT",
-    "some": "DT", "any": "DT", "no": "DT", "all": "DT", "both": "DT",
-    "another": "DT",
-    "which": "WDT", "what": "WP", "who": "WP", "whom": "WP", "whose": "WP$",
-    "there": "EX",
-    "i": "PRP", "you": "PRP", "he": "PRP", "she": "PRP", "it": "PRP",
-    "we": "PRP", "they": "PRP", "them": "PRP", "him": "PRP", "her": "PRP",
-    "me": "PRP", "us": "PRP", "itself": "PRP", "himself": "PRP",
-    "herself": "PRP", "themselves": "PRP",
-    "my": "PRP$", "your": "PRP$", "his": "PRP$", "its": "PRP$",
-    "our": "PRP$", "their": "PRP$",
-    "in": "IN", "of": "IN", "on": "IN", "at": "IN", "by": "IN",
-    "for": "IN", "with": "IN", "from": "IN", "into": "IN", "about": "IN",
-    "over": "IN", "under": "IN", "after": "IN", "before": "IN",
-    "between": "IN", "through": "IN", "during": "IN", "against": "IN",
-    "among": "IN", "within": "IN", "without": "IN", "near": "IN",
-    "as": "IN", "than": "IN", "because": "IN", "if": "IN", "while": "IN",
-    "although": "IN", "though": "IN", "since": "IN", "until": "IN",
-    "upon": "IN", "amid": "IN", "via": "IN", "like": "IN",
-    "to": "TO",
-    "and": "CC", "or": "CC", "but": "CC", "nor": "CC", "yet": "CC",
-    "can": "MD", "could": "MD", "will": "MD", "would": "MD", "may": "MD",
-    "might": "MD", "must": "MD", "shall": "MD", "should": "MD",
-    "is": "VBZ", "are": "VBP", "was": "VBD", "were": "VBD", "am": "VBP",
-    "be": "VB", "been": "VBN", "being": "VBG",
-    "has": "VBZ", "have": "VBP", "had": "VBD", "having": "VBG",
-    "does": "VBZ", "do": "VBP", "did": "VBD", "done": "VBN",
-    "'s": "POS", "'re": "VBP", "'ve": "VBP", "'ll": "MD", "'m": "VBP",
-    "'d": "MD", "n't": "RB",
-    "not": "RB", "also": "RB", "very": "RB", "only": "RB", "just": "RB",
-    "now": "RB", "then": "RB", "here": "RB", "too": "RB", "well": "RB",
-    "never": "RB", "always": "RB", "often": "RB", "still": "RB",
-    "already": "RB", "currently": "RB", "recently": "RB", "formerly": "RB",
-    "up": "RP", "out": "RP", "off": "RP", "down": "RP",
-    "$": "$", "%": "NN",
-    "born": "VBN", "based": "VBN", "located": "VBN", "named": "VBN",
-    "known": "VBN", "called": "VBN",
-    "anything": "NN", "something": "NN", "nothing": "NN",
-    "everything": "NN", "anyone": "NN", "someone": "NN", "everyone": "NN",
-    "nobody": "NN", "anybody": "NN", "somebody": "NN",
-}
-
-# common irregular past forms → tag VBD when not sentence-initial NNP
-_COMMON_VBD = frozenset(
-    "said made took came gave went found told became got kept held met "
-    "led paid sold bought built sent won grew rose fell left felt lost "
-    "ran saw wrote spoke brought began acquired announced reported "
-    "launched founded created developed established owned signed "
-    "joined visited studied received produced discovered invented "
-    "published directed composed designed".split()
-)
+# verb lemmas the finite-verb repair accepts as a VBZ base form
 _COMMON_VB = frozenset(
     "say make take come give go find tell become get keep hold meet "
     "lead pay sell buy build send win grow rise fall leave feel lose "
@@ -104,9 +48,6 @@ _COMMON_VB = frozenset(
     "contain employ support represent border locate".split()
 )
 
-_PUNCT_TAGS = {".": ".", ",": ",", ";": ":", ":": ":", "?": ".", "!": ".",
-               "``": "``", "''": "''", '"': "''", "(": "-LRB-", ")": "-RRB-"}
-
 
 def split_sentences(text: str) -> list[str]:
     return [s.strip() for s in _SENT_SPLIT.split(text or "") if s.strip()]
@@ -114,65 +55,6 @@ def split_sentences(text: str) -> list[str]:
 
 def tokenize(sentence: str) -> list[str]:
     return _TOKEN.findall(sentence)
-
-
-_CD_WORDS = frozenset({"million", "billion", "trillion", "thousand", "hundred"})
-_COMMON_JJ = frozenset(
-    """new net common third next first second last big small high low major
-    strong early late several recent own chief financial federal annual
-    daily former current senior junior top main key real full total
-    general public private foreign domestic national local same other
-    such good bad long short young old free extra nonexecutive executive
-    due likely able potential possible previous overall additional""".split()
-)
-_ORDINAL_SUFFIX = ("th", "st", "nd", "rd")
-
-
-def _tag_word(w: str, prev_tag: str, is_first: bool) -> str:
-    if w in _PUNCT_TAGS:
-        return _PUNCT_TAGS[w]
-    lw = w.lower()
-    if prev_tag in ("MD", "TO") and lw in ("have", "be", "do"):
-        return "VB"
-    if lw in _LEX:
-        return _LEX[lw]
-    if lw in TAG_LEXICON:
-        return TAG_LEXICON[lw]
-    if lw in _CD_WORDS:
-        return "CD"
-    if lw in _COMMON_JJ:
-        return "JJ"
-    if lw[0].isdigit() and lw.endswith(_ORDINAL_SUFFIX):
-        return "JJ"
-    c0 = w[0]
-    if c0.isdigit() and _NUM_RE.fullmatch(w):
-        return "CD"
-    if c0.isupper() and not is_first:
-        return "NNP"
-    if prev_tag == "TO" and lw in _COMMON_VB:
-        return "VB"
-    if prev_tag == "MD":
-        return "VB"
-    if lw in _COMMON_VBD:
-        return "VBD"
-    if lw.endswith("ly"):
-        return "RB"
-    if lw.endswith("ing") and len(lw) > 5:
-        return "VBG"
-    if lw.endswith("ed") and len(lw) > 4:
-        return "VBD" if prev_tag in ("NN", "NNS", "NNP", "NNPS", "PRP", "CD") else "VBN"
-    if lw.endswith("s") and not lw.endswith("ss") and len(lw) > 3:
-        base = lw[:-1]
-        if base in _COMMON_VB and prev_tag in ("NN", "NNS", "NNP", "NNPS", "PRP", "WDT", "WP", "CD"):
-            return "VBZ"
-        return "NNS"
-    if lw in _COMMON_VB and prev_tag in ("NN", "NNS", "NNP", "NNPS", "PRP", "WDT", "WP", "CD", "RB"):
-        return "VBP"
-    if c0.isupper() and is_first:
-        return "NNP"
-    if lw.endswith(("ous", "ful", "ive", "able", "ible", "al", "ic")):
-        return "JJ"
-    return "NN"
 
 
 _WH_WORDS = frozenset({"who", "which", "whom", "whose"})
@@ -246,13 +128,12 @@ def _finite_verb_repair(tokens: list[str], tags: list[str],
 
 
 def pos_tag(tokens: list[str]) -> list[str]:
-    """POS layer. Primary path: the averaged-perceptron model trained
-    on the reference's shipped tagged layers (held-out web POS acc
-    ≈0.89 vs 0.71 for the rules below — scripts/train_tagger.py); the
-    rule/lexicon tagger remains the deterministic fallback when no
-    model file is present.
+    """POS layer: the averaged-perceptron model trained on the
+    reference's shipped tagged layers (held-out web POS acc ≈0.89 —
+    scripts/train_tagger.py). Raises ``FileNotFoundError`` when the
+    model file is absent.
 
-    Two clause-level repairs wrap either tagger (sequence taggers are
+    Two clause-level repairs wrap the tagger (sequence taggers are
     local; these constraints are not):
 
     * **relative-clause splice** — for ``X , who ... , <verb> ...``
@@ -265,8 +146,7 @@ def pos_tag(tokens: list[str]) -> list[str]:
     """
     from openie_backend_spark.nlp import perceptron
 
-    model = perceptron.get_tagger()
-    tag_fn = model.tag if model is not None else rule_pos_tag
+    tag_fn = perceptron.get_tagger().tag
     tags = tag_fn(tokens)
     spans = _wh_bracket_spans(tokens)
     if spans:
@@ -280,93 +160,14 @@ def pos_tag(tokens: list[str]) -> list[str]:
     return tags
 
 
-def rule_pos_tag(tokens: list[str]) -> list[str]:
-    tags: list[str] = []
-    prev = "<S>"
-    for i, w in enumerate(tokens):
-        t = _tag_word(w, prev, i == 0)
-        tags.append(t)
-        prev = t
-    # contextual repair: "that" is a complementizer (IN) before a clause
-    # start and a relative pronoun (WDT) after a noun, DT only before a
-    # nominal it determines
-    for i, w in enumerate(tokens):
-        if w.lower() == "that" and tags[i] == "DT":
-            nxt = tags[i + 1] if i + 1 < len(tags) else "."
-            prv = tags[i - 1] if i > 0 else "<S>"
-            if nxt in ("DT", "PRP", "PRP$", "EX", "NNP", "CD") or nxt.startswith("VB"):
-                tags[i] = "WDT" if prv.startswith("NN") and nxt.startswith("VB") else "IN"
-    return tags
-
-
-_NP_TAGS = frozenset({"DT", "JJ", "JJR", "JJS", "NN", "NNS", "NNP", "NNPS",
-                      "CD", "PRP", "PRP$", "POS", "$", "WDT", "WP", "EX"})
-_VP_TAGS = frozenset({"VB", "VBD", "VBG", "VBN", "VBP", "VBZ", "MD"})
-
-
-_SBAR_WORDS = frozenset(
-    {"that", "because", "if", "although", "though", "whether", "while",
-     "since", "unless"}
-)
-
-
 def chunk(tokens: list[str], tags: list[str]) -> list[str]:
-    """IOB chunk layer. Primary path: the averaged-perceptron chunker
-    trained on the reference's gold OpenNLP chunk layers (held-out
-    accuracy ≈0.98 on gold POS, jackknife-trained against predicted
-    POS); rule fallback below when no model file is present."""
+    """IOB chunk layer: the averaged-perceptron chunker trained on the
+    reference's gold OpenNLP chunk layers (held-out accuracy ≈0.98 on
+    gold POS, jackknife-trained against predicted POS). Raises
+    ``FileNotFoundError`` when the model file is absent."""
     from openie_backend_spark.nlp import perceptron
 
-    model = perceptron.get_chunker()
-    if model is not None:
-        return model.chunk(tokens, tags)
-    return rule_chunk(tokens, tags)
-
-
-def rule_chunk(tokens: list[str], tags: list[str]) -> list[str]:
-    """IOB chunk layer from POS tags (NP/VP/PP/SBAR/ADVP/PRT/O).
-
-    Rules calibrated against the reference fixture's gold IOB layers
-    (OpenNLP chunker behavior): partitive/complement "of" stays inside
-    the NP ("a base of 1981" is ONE chunk); determiners do not restart
-    an NP; infinitival "to"+VB is part of the verb phrase; finite
-    subordinators open an SBAR.
-    """
-    out: list[str] = []
-    prev = "O"
-    n = len(tokens)
-    for i, (w, t) in enumerate(zip(tokens, tags)):
-        lw = w.lower()
-        nxt = tags[i + 1] if i + 1 < n else "."
-        if t in _NP_TAGS:
-            if t in ("WDT", "WP", "EX") and not prev.endswith("NP"):
-                cur = "B-NP"
-            elif prev.endswith("NP"):
-                cur = "I-NP"
-            else:
-                cur = "B-NP"
-        elif t == "TO" and nxt in ("VB", "VBP"):
-            cur = "I-VP" if prev.endswith("VP") else "B-VP"
-        elif t in _VP_TAGS:
-            cur = "I-VP" if prev.endswith("VP") else "B-VP"
-        elif t == "IN" and lw == "of" and prev.endswith("NP"):
-            cur = "I-NP"
-        elif t == "IN" and lw in _SBAR_WORDS and lw != "that":
-            cur = "B-SBAR"
-        elif t == "IN" and lw == "that":
-            cur = "B-SBAR"
-        elif t in ("IN", "TO"):
-            cur = "B-PP"
-        elif t == "RP":
-            cur = "B-PRT"
-        elif t in ("RB", "RBR", "RBS"):
-            # adverb inside a verb group stays in the VP ("did not go")
-            cur = "I-VP" if prev.endswith("VP") else "B-ADVP"
-        else:
-            cur = "O"
-        out.append(cur)
-        prev = cur
-    return out
+    return perceptron.get_chunker().chunk(tokens, tags)
 
 
 def chunk_sentence(sentence: str) -> tuple[list[str], list[str], list[str]]:

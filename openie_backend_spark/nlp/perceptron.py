@@ -1,4 +1,5 @@
-"""Averaged-perceptron POS tagger (pure Python, no dependencies).
+"""Averaged-perceptron POS tagger and chunker (pure Python, plus a numpy
+decode table for the unconstrained path).
 
 The reference tags raw sentences with shipped OpenNLP maxent models
 (``hadoop/.../ScoobiSentenceChunker.scala:19,35-52``); binary model
@@ -128,40 +129,35 @@ class _AveragedPerceptron:
         self.tags: list[str] = []
         self._tags_desc: list[str] = []
         # dense float64 row per feature over tags_desc, for the
-        # UNCONSTRAINED decode (see _predict); None = unbuilt,
-        # False = numpy unavailable (dict fallback)
+        # UNCONSTRAINED decode of FINAL weights (see _predict); None
+        # while the weights still move (training) or were set by hand
         self._dense = None
 
     # ------------------------------------------------------ inference
 
-    def _ensure_dense(self):
-        """Dense rows for the unconstrained path. Vector adds replace
-        the per-(feature, tag) dict accumulation: the per-tag addition
-        SEQUENCE (feature order, skipping absent rows, +0.0 for tags a
-        row lacks — exact in IEEE) is unchanged, and argmax-first over
-        the DESCENDING tag order reproduces _argmax_tag's (score, tag)
-        tie-break including the all-zero case, so predictions are
-        bit-identical (pinned by the parity harness: TP/FP/FN exactly
-        312/12/5 before and after). Built once per process — the warm
-        daemon builds it pre-fork, so workers inherit one shared copy."""
-        if self._dense is None:
-            try:
-                import numpy as np
-            except Exception:
-                self._dense = False
-                return self._dense
-            if not self._tags_desc:
-                self._tags_desc = sorted(self.tags, reverse=True)
-            idx = {t: i for i, t in enumerate(self._tags_desc)}
-            dense = {}
-            n = len(self._tags_desc)
-            for f, row in self.weights.items():
-                arr = np.zeros(n)
-                for t, v in row.items():
-                    arr[idx[t]] = v
-                dense[f] = arr
-            self._dense = dense
-        return self._dense
+    def _build_dense(self) -> None:
+        """Dense rows for the unconstrained path, built once the
+        weights are final (``_finalize_training`` / ``load``). Vector
+        adds replace the per-(feature, tag) dict accumulation: the
+        per-tag addition SEQUENCE (feature order, skipping absent rows,
+        +0.0 for tags a row lacks — exact in IEEE) is unchanged, and
+        argmax-first over the DESCENDING tag order reproduces
+        _argmax_tag's (score, tag) tie-break including the all-zero
+        case, so predictions are bit-identical to the dict decode.
+        Built at load, so the warm daemon builds it pre-fork and
+        workers inherit one shared copy."""
+        import numpy as np
+
+        self._tags_desc = sorted(self.tags, reverse=True)
+        idx = {t: i for i, t in enumerate(self._tags_desc)}
+        dense = {}
+        n = len(self._tags_desc)
+        for f, row in self.weights.items():
+            arr = np.zeros(n)
+            for t, v in row.items():
+                arr[idx[t]] = v
+            dense[f] = arr
+        self._dense = dense
 
     def _predict(self, feats, allowed: list[str] | None = None) -> str:
         weights = self.weights
@@ -184,8 +180,8 @@ class _AveragedPerceptron:
                 if bt is None or v > bv or (v == bv and t > bt):
                     bv, bt = v, t
             return bt
-        dense = self._dense if self._dense is not None else self._ensure_dense()
-        if dense is not False:
+        dense = self._dense
+        if dense is not None:
             rows = [r for f in feats if (r := dense.get(f)) is not None]
             if not rows:
                 return self.default_tag
@@ -195,6 +191,7 @@ class _AveragedPerceptron:
                 for r in rows[2:]:
                     acc += r
             return self._tags_desc[int(acc.argmax())]
+        # weights still moving (training): score from the dicts
         scores: dict[str, float] = {}
         for f in feats:
             w = weights.get(f)
@@ -208,8 +205,10 @@ class _AveragedPerceptron:
     # ------------------------------------------------------- training
 
     def _begin_training(self, tagset) -> None:
-        self.tags = sorted(tagset)
+        # the default tag is a possible prediction, so it is a tag
+        self.tags = sorted(set(tagset) | {self.default_tag})
         self._tags_desc = []
+        self._dense = None
         self._totals = defaultdict(lambda: defaultdict(float))
         self._stamps = defaultdict(lambda: defaultdict(int))
         self.weights = defaultdict(lambda: defaultdict(float))
@@ -244,6 +243,7 @@ class _AveragedPerceptron:
                 averaged[f] = row
         self.weights = averaged
         del self._totals, self._stamps, self._instance
+        self._build_dense()
 
 
 class PerceptronTagger(_AveragedPerceptron):
@@ -381,10 +381,7 @@ class PerceptronTagger(_AveragedPerceptron):
         t.single_tag = blob["single_tag"]
         t.tag_dict = blob.get("tag_dict", {})
         t.weights = blob["weights"]
-        # build the dense decode table at load time so the warm daemon
-        # constructs it ONCE pre-fork; workers then share it via COW
-        # instead of each building a private copy on first use
-        t._ensure_dense()
+        t._build_dense()
         return t
 
 
@@ -521,6 +518,7 @@ class PerceptronChunker(_AveragedPerceptron):
         c.tags = blob["tags"]
         c.pos_dict = blob.get("pos_dict", {})
         c.weights = blob["weights"]
+        c._build_dense()
         return c
 
 
@@ -528,24 +526,20 @@ _CACHED: PerceptronTagger | None = None
 _CACHED_CHUNKER: PerceptronChunker | None = None
 
 
-def get_tagger() -> PerceptronTagger | None:
-    """Process-wide cached model; None when no model file is present
-    (the rule/lexicon tagger then remains the raw path).
-    ``OPENIE_TAGGER=rule`` forces the rule path — the bench A/B switch
-    for separating perceptron cost from box noise (local-mode python
-    workers inherit the driver's environment)."""
-    if os.environ.get("OPENIE_TAGGER") == "rule":
-        return None
+def get_tagger() -> PerceptronTagger:
+    """Process-wide cached POS model, loaded from ``MODEL_PATH`` on
+    first use. The model is required: a missing file raises
+    ``FileNotFoundError`` naming the path."""
     global _CACHED
-    if _CACHED is None and os.path.exists(MODEL_PATH):
-        _CACHED = PerceptronTagger.load()
+    if _CACHED is None:
+        _CACHED = PerceptronTagger.load(MODEL_PATH)
     return _CACHED
 
 
-def get_chunker() -> PerceptronChunker | None:
-    if os.environ.get("OPENIE_TAGGER") == "rule":
-        return None
+def get_chunker() -> PerceptronChunker:
+    """Process-wide cached chunk model from ``CHUNKER_MODEL_PATH``;
+    raises ``FileNotFoundError`` like ``get_tagger``."""
     global _CACHED_CHUNKER
-    if _CACHED_CHUNKER is None and os.path.exists(CHUNKER_MODEL_PATH):
-        _CACHED_CHUNKER = PerceptronChunker.load()
+    if _CACHED_CHUNKER is None:
+        _CACHED_CHUNKER = PerceptronChunker.load(CHUNKER_MODEL_PATH)
     return _CACHED_CHUNKER

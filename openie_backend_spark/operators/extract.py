@@ -78,6 +78,37 @@ SLIM_SCHEMA = StructType(
 )
 
 
+def _sentence_rows(rows: list, key: tuple, toks, tags, chks,
+                   include_layers: bool) -> None:
+    """Append one row per ReVerb extraction of a tagged sentence to
+    ``rows``: the ``key`` columns, the three token layers when
+    ``include_layers``, then the 20 extraction fields in
+    ``EXTRACTION_SCHEMA`` order. The one row builder of both NLP
+    stages (and so of the single-process mirror)."""
+    layers = (toks, tags, chks) if include_layers else ()
+    seg = lambda s, t: (toks[s:t], tags[s:t])
+    for e in reverb.extract(toks, tags, chks):
+        (a1s, a1e), (rs, re_), (a2s, a2e) = e.arg1, e.rel, e.arg2
+        rows.append(
+            (
+                *key, *layers,
+                a1s, a1e, rs, re_, a2s, a2e,
+                " ".join(toks[a1s:a1e]),
+                " ".join(toks[rs:re_]),
+                " ".join(toks[a2s:a2e]),
+                stemmer.index_key_part(*seg(a1s, a1e)),
+                stemmer.index_key_part(*seg(rs, re_)),
+                stemmer.index_key_part(*seg(a2s, a2e)),
+                stemmer.frontend_key_part(*seg(a1s, a1e)),
+                stemmer.frontend_key_part(*seg(rs, re_)),
+                stemmer.frontend_key_part(*seg(a2s, a2e)),
+                stemmer.head_phrase(*seg(a1s, a1e)),
+                stemmer.head_phrase(*seg(a2s, a2e)),
+                _confidence(toks, tags, chks, e),
+            )
+        )
+
+
 def _make_extract_batches(include_layers: bool):
     schema = EXTRACTION_SCHEMA if include_layers else SLIM_SCHEMA
     cols = [f.name for f in schema.fields]
@@ -95,28 +126,8 @@ def _make_extract_batches(include_layers: bool):
                         chunker.chunk_sentence(s) for s in chunker.split_sentences(text)
                     ]
                 for sid, (toks, tags, chks) in enumerate(sentences):
-                    for e in reverb.extract(toks, tags, chks):
-                        (a1s, a1e), (rs, re_), (a2s, a2e) = e.arg1, e.rel, e.arg2
-                        seg = lambda s, t: (toks[s:t], tags[s:t])
-                        layers = (toks, tags, chks) if include_layers else ()
-                        rows.append(
-                            (
-                                url, sid, *layers,
-                                a1s, a1e, rs, re_, a2s, a2e,
-                                " ".join(toks[a1s:a1e]),
-                                " ".join(toks[rs:re_]),
-                                " ".join(toks[a2s:a2e]),
-                                stemmer.index_key_part(*seg(a1s, a1e)),
-                                stemmer.index_key_part(*seg(rs, re_)),
-                                stemmer.index_key_part(*seg(a2s, a2e)),
-                                stemmer.frontend_key_part(*seg(a1s, a1e)),
-                                stemmer.frontend_key_part(*seg(rs, re_)),
-                                stemmer.frontend_key_part(*seg(a2s, a2e)),
-                                stemmer.head_phrase(*seg(a1s, a1e)),
-                                stemmer.head_phrase(*seg(a2s, a2e)),
-                                _confidence(toks, tags, chks, e),
-                            )
-                        )
+                    _sentence_rows(rows, (url, sid), toks, tags, chks,
+                                   include_layers)
             yield pd.DataFrame(rows, columns=cols)
 
     return _extract_batches, schema
@@ -215,29 +226,8 @@ def _make_distinct_extract_batches(include_layers: bool):
         for pdf in batches:
             rows = []
             for key, sent in zip(pdf["sent_key"], pdf["sentence"]):
-                toks, tags, chks = chunker.chunk_sentence(sent)
-                for e in reverb.extract(toks, tags, chks):
-                    (a1s, a1e), (rs, re_), (a2s, a2e) = e.arg1, e.rel, e.arg2
-                    seg = lambda s, t: (toks[s:t], tags[s:t])
-                    layers = (toks, tags, chks) if include_layers else ()
-                    rows.append(
-                        (
-                            key, *layers,
-                            a1s, a1e, rs, re_, a2s, a2e,
-                            " ".join(toks[a1s:a1e]),
-                            " ".join(toks[rs:re_]),
-                            " ".join(toks[a2s:a2e]),
-                            stemmer.index_key_part(*seg(a1s, a1e)),
-                            stemmer.index_key_part(*seg(rs, re_)),
-                            stemmer.index_key_part(*seg(a2s, a2e)),
-                            stemmer.frontend_key_part(*seg(a1s, a1e)),
-                            stemmer.frontend_key_part(*seg(rs, re_)),
-                            stemmer.frontend_key_part(*seg(a2s, a2e)),
-                            stemmer.head_phrase(*seg(a1s, a1e)),
-                            stemmer.head_phrase(*seg(a2s, a2e)),
-                            _confidence(toks, tags, chks, e),
-                        )
-                    )
+                _sentence_rows(rows, (key,), *chunker.chunk_sentence(sent),
+                               include_layers)
             yield pd.DataFrame(rows, columns=cols)
 
     return _batches, out_schema

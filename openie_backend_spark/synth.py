@@ -239,56 +239,23 @@ DEFAULT_N_PAGES = 150
 
 
 def corpus_cache_dir(n_pages: int = DEFAULT_N_PAGES) -> str:
-    """Cache directory name keyed on the NLP+synth source hash (via
-    ``mirror.source_version`` — ``expected_triples`` runs the live
-    extractor, so a tagger change must regenerate the corpus too) and
-    the page count. Stale /tmp pages were an ADVICE r2 finding."""
-    from openie_backend_spark import mirror
-
-    return f"/tmp/openie_synth_cache_{mirror.source_version()}_n{n_pages}"
+    """Fixed cache path per page count; its ``VERSION`` stamp is the
+    NLP+synth source hash (``mirror.source_version`` —
+    ``expected_triples`` runs the live extractor, so a tagger change
+    must regenerate the corpus too). Stale /tmp pages were an ADVICE
+    r2 finding."""
+    return f"/tmp/openie_synth_cache_n{n_pages}"
 
 
 def ensure_corpus(n_pages: int = DEFAULT_N_PAGES) -> str:
-    """Idempotent, race-safe corpus materialization: generate into a
-    pid-suffixed temp dir, then atomically rename into place (the loser
-    of a concurrent first-run race just discards its copy)."""
-    import shutil
+    """Idempotent, race-safe corpus materialization: a stale or missing
+    stamp regenerates the corpus into a pid-suffixed sibling that is
+    swapped into place (``mirror.stamped_dir``)."""
+    from openie_backend_spark import mirror
 
-    d = corpus_cache_dir(n_pages)
-    if not os.path.exists(os.path.join(d, "pages.parquet")):
-        tmp = f"{d}.tmp.{os.getpid()}"
-        try:
-            write_corpus(tmp, n_pages=n_pages)
-            try:
-                os.rename(tmp, d)
-            except OSError:
-                pass  # lost a concurrent first-run race; d exists
-        finally:
-            # race loser or failed generation: never leave the
-            # pid-suffixed dir behind (generation errors still raise)
-            shutil.rmtree(tmp, ignore_errors=True)
-        # prune ONLY caches keyed on superseded source versions —
-        # every tagger/synth edit creates a fresh dir and /tmp
-        # accretes. Leave alone: in-flight '.tmp.<pid>' staging dirs
-        # of concurrent processes, and current-version caches for
-        # other n_pages values (both were ADVICE r3 findings).
-        from openie_backend_spark import mirror
-
-        base = os.path.dirname(d)
-        keep_prefix = f"openie_synth_cache_{mirror.source_version()}_"
-        for entry in os.listdir(base):
-            if not entry.startswith("openie_synth_cache_"):
-                continue
-            if ".tmp." in entry:
-                # staging dir: spare it only while its owner is alive —
-                # a crashed generator's orphan must not accrete forever
-                pid = entry.rsplit(".tmp.", 1)[1]
-                if pid.isdigit() and os.path.exists(f"/proc/{pid}"):
-                    continue
-            elif entry.startswith(keep_prefix):
-                continue
-            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
-    return d
+    return mirror.stamped_dir(
+        corpus_cache_dir(n_pages),
+        lambda tmp: write_corpus(tmp, n_pages=n_pages))
 
 
 def write_corpus(out_dir: str, n_pages: int = 200, seed: int = SEED) -> None:
