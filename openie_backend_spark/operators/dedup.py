@@ -544,6 +544,9 @@ def dup_clusters(
     Iterations are O(diameter); near-dup clusters are shallow (stars
     from the LSH bucket representative), so convergence is fast. Each
     iteration is one join + one aggregation — no driver-side graph.
+    The fixpoint test is one count of the labels that changed in the
+    round. It has no LIMIT, so every round of every pass reuses the
+    same generated classes.
     """
     # materialize the edge set ONCE: `pairs` is typically the full LSH
     # candidate pipeline, and it is referenced twice here (the union of
@@ -580,12 +583,14 @@ def dup_clusters(
                 ).alias("label"),
             )
         ).localCheckpoint(eager=True)
-        # fixpoint check: any label changed?
+        # fixpoint check: how many labels changed? A full count, not a
+        # limit-1 probe: Spark names every LIMIT's counter from a global
+        # id, so a LIMIT plan never hits the codegen cache and each round
+        # of each pass would recompile it
         changed = (
             labels.alias("o")
             .join(new_labels.alias("n"), "node")
             .filter(F.col("o.label") != F.col("n.label"))
-            .limit(1)
             .count()
         )
         labels = new_labels
@@ -663,14 +668,16 @@ def dup_clusters_twostar(
     iteration cap. Two-star provably converges in O(log² n) rounds on
     ANY graph shape (O(log n) in practice) — each round is one
     groupBy-min plus one equality join, all map-side-combinable, no
-    driver-side graph state. The fixpoint test is an ``exceptAll``
-    limit-1 count per round (same bounded driver pattern as
-    ``dup_clusters``); at convergence the edge set is a star forest
-    where every node points at its component minimum.
+    driver-side graph state. The fixpoint test is one count per round
+    of the symmetric ``exceptAll`` difference between the old and new
+    edge multisets, with no LIMIT, so every round of every pass reuses
+    the same generated classes (as in ``dup_clusters``). At
+    convergence the edge set is a star forest where every node points
+    at its component minimum.
 
     Output contract matches ``dup_clusters`` exactly — (doc_id,
     cluster_id = minimum member id) — so the two are interchangeable
-    and equivalence-tested (tests/test_dedup.py).
+    and equivalence-tested (tests/test_operators_spark.py).
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -681,10 +688,13 @@ def dup_clusters_twostar(
     for _ in range(max_iterations):
         new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         # Star forest fixpoint: small-star output is already oriented
-        # large→small, so set equality is plain exceptAll both ways.
+        # large→small, so set equality is plain exceptAll both ways. One
+        # count of the symmetric multiset difference is zero exactly when
+        # both differences are empty, and has no LIMIT (see dup_clusters).
         changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
+            new_edges.exceptAll(edges)
+            .union(edges.exceptAll(new_edges))
+            .count()
         )
         edges = new_edges
         if changed == 0:

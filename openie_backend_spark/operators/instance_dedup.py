@@ -103,15 +103,19 @@ def dedup_instances(extractions: DataFrame) -> DataFrame:
             if not len(pdf):
                 carry = None
                 continue
+            # null-safe: a null key is a group of its own, as in
+            # groupBy().applyInPandas
             is_last = pd.Series(True, index=pdf.index)
             for k in GROUP_KEY:
-                is_last &= pdf[k] == pdf[k].iloc[-1]
+                col, last = pdf[k], pdf[k].iloc[-1]
+                is_last &= col.isna() if pd.isna(last) else col == last
             carry = pdf[is_last].reset_index(drop=True)
             head = pdf[~is_last]
             if len(head):
                 out = [
                     _dedup_one_group(g.reset_index(drop=True))
-                    for _, g in head.groupby(list(GROUP_KEY), sort=False)
+                    for _, g in head.groupby(list(GROUP_KEY), sort=False,
+                                             dropna=False)
                 ]
                 yield pd.concat(out, ignore_index=True)
         if carry is not None and len(carry):

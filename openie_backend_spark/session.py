@@ -6,6 +6,29 @@ Single place where scale-relevant knobs live: AQE (runtime re-planning
 path), and shuffle-partition sizing. On a real cluster the same
 settings apply via ``spark-submit --conf``; ``local[K]`` is only the
 sandbox harness.
+
+The codegen cache (``spark.sql.codegen.cache.maxEntries``, static, so
+it can only be set here) holds 1000 compiled classes instead of
+Spark's default 100. Spark compiles every generated class with Janino
+and keeps it in one LRU cache per JVM; a repeated pass that finds its
+classes there compiles nothing. The working sets, counted as the
+growth of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count with a
+100000-entry cache, on a 4-core host:
+
+- ``kgbench/run.py --workload kg_build --seed 1 --trace 1``, the whole
+  run with its serve and ingest probes: 374 (35 of them the session
+  prewarm below; one build alone needs about 205).
+- ``kgbench/run.py --workload corpus_dedup --seed 1``: 190 (one pass
+  alone needs 131-155).
+- ``bench.py`` at sf0.1, the suite in one session: 193.
+
+At 100 entries every pass evicted its own classes before their next
+use, so each repeated pass recompiled all of them, and the JIT then
+compiled the new classes again: a ``corpus_dedup`` pass took 13.5
+CPU-s with the old size and 8.7 with this one (BENCH/CODEGEN.md).
+1000 is over twice the largest working set. The cache is keyed
+by class loader as well as source, so a local session can hold a class
+twice; the counts above include that.
 """
 
 from __future__ import annotations
@@ -114,6 +137,9 @@ def get_spark(
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_GRAFT_JVM_OPTS", ""))
         .config("spark.sql.session.timeZone", "UTC")
+        # static conf: sized past one pass's generated classes (see the
+        # module docstring for the measured working sets)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

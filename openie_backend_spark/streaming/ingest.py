@@ -145,6 +145,9 @@ def run_incremental(
     # batch. Namespace markers by a run id that lives (and dies) with
     # the checkpoint directory itself.
     os.makedirs(checkpoint_dir, exist_ok=True)
+    # a first batch with no groups writes only its marker, into a table
+    # directory that no merge has created yet
+    os.makedirs(groups_dir, exist_ok=True)
     run_id_path = os.path.join(checkpoint_dir, "_ingest_run_id")
     if not os.path.exists(run_id_path):
         with open(run_id_path, "w") as fh:

@@ -2,7 +2,11 @@
 CPU between the JVM and the Python workers, with stage-level wall times
 from the event log. Guide §1: measure first, isolate with noop sink.
 
-Usage: python scripts/cpu_attrib.py <query_name> [sf_dir]
+Each run also prints how many classes Spark generated and compiled for
+it, and the milliseconds the compiles took, from Spark's codegen
+metrics: a run that hits the codegen cache compiles none.
+
+Usage: python scripts/cpu_attrib.py <query_name> [sf_dir]   (any cwd)
 """
 
 from __future__ import annotations
@@ -14,6 +18,25 @@ import os
 import sys
 import threading
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def bootstrap() -> None:
+    """Put the repo root on this process's and the Python workers' path."""
+    sys.path[:0] = [ROOT]
+    old = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = ROOT + (os.pathsep + old if old else "")
+
+
+def codegen_totals(spark) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) since the JVM started."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return compiles, ns / 1e6
 
 
 def pid_cmd_cpu() -> dict[int, tuple[str, float]]:
@@ -45,6 +68,7 @@ def main() -> None:
     for f in glob.glob(evdir + "/*"):
         shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
 
+    bootstrap()
     import __spark_entry__ as entrymod
     from openie_backend_spark.session import get_spark
 
@@ -63,12 +87,14 @@ def main() -> None:
     repeats = int(os.environ.get("ATTRIB_REPEATS", "2"))
     for r in range(repeats):
         base0 = pid_cmd_cpu()
+        cg0 = codegen_totals(spark)
         t0 = time.time()
         spark.sparkContext.setJobDescription(f"query:{name}:run{r}")
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         wall = time.time() - t0
         base1 = pid_cmd_cpu()
+        cg1 = codegen_totals(spark)
 
         agg: dict[str, float] = {}
         for pid, (pname, cpu) in base1.items():
@@ -84,7 +110,9 @@ def main() -> None:
         print(json.dumps({"query": name, "run": r, "wall_s": round(wall, 2),
                           "n_python_procs": npy,
                           "cpu_by_proc": {k: round(v, 1)
-                                          for k, v in agg.items()}}))
+                                          for k, v in agg.items()},
+                          "codegen_compiles": cg1[0] - cg0[0],
+                          "codegen_compile_ms": round(cg1[1] - cg0[1], 1)}))
 
     spark.stop()
     time.sleep(1)

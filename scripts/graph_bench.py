@@ -53,7 +53,7 @@ def propagation_rounds(pairs, max_iterations=2000):
         )
         changed = (
             labels.alias("o").join(new.alias("n"), "node")
-            .filter(F.col("o.label") != F.col("n.label")).limit(1).count()
+            .filter(F.col("o.label") != F.col("n.label")).count()
         )
         labels = new.localCheckpoint(eager=True)
         if changed == 0:
@@ -73,8 +73,7 @@ def twostar_rounds(pairs, max_iterations=60):
     )
     for i in range(max_iterations):
         new = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        changed = (new.exceptAll(edges).limit(1).count()
-                   + edges.exceptAll(new).limit(1).count())
+        changed = new.exceptAll(edges).union(edges.exceptAll(new)).count()
         edges = new
         if changed == 0:
             return i + 1

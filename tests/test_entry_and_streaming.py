@@ -187,6 +187,33 @@ def test_ingest_replay_guard_survives_checkpoint_reset(spark, tmp_path):
         "fresh checkpoint must reprocess data despite stale markers"
 
 
+def test_ingest_first_batch_without_groups_leaves_marker(spark, tmp_path):
+    """A first micro-batch that yields no groups writes only its replay
+    marker; the groups table directory does not exist yet and must be
+    created for it. A later batch then merges as usual."""
+    import glob
+
+    from openie_backend_spark.streaming.ingest import run_incremental
+
+    landing = tmp_path / "landing"
+    groups_dir = str(tmp_path / "groups")
+    ckpt = str(tmp_path / "ckpt")
+    landing.mkdir()
+    schema = "url string, text string, lang string"
+    junk = spark.createDataFrame([("j1", "12345", "en"), ("j2", "!!!", "en")], schema)
+    junk.write.parquet(str(landing / "b1"))
+    run_incremental(spark, str(landing) + "/*", groups_dir, ckpt, junk.schema)
+    assert len(glob.glob(os.path.join(groups_dir, "_batch_*_0.done"))) == 1
+    assert not glob.glob(os.path.join(groups_dir, "bucket=*"))
+
+    real = spark.createDataFrame(
+        [("u1", "Acme Corp acquired Globex Inc. .", "en")], schema)
+    real.write.parquet(str(landing / "b2"))
+    run_incremental(spark, str(landing) + "/*", groups_dir, ckpt, real.schema)
+    assert spark.read.parquet(groups_dir).filter(
+        F.col("rel_norm") == "acquire").first()["size"] == 1
+
+
 def test_cli_extract_roundtrips_through_tab_reader(spark, tmp_path):
     """S8 stdin/stdout CLI: its 7-column output is the reference's
     ReVerbExtraction tab format, read back losslessly by the S1

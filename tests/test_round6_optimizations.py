@@ -78,14 +78,21 @@ def test_simhash_matches_per_bit_form(spark):
     assert a == b
 
 
-def test_instance_dedup_batched_matches_grouped(spark):
-    """The r6 mapInPandas rewrite must equal groupBy().applyInPandas —
-    including groups that SPAN Arrow batches (forced with a tiny
-    maxRecordsPerBatch)."""
-    rng = random.Random(13)
+_EXTRACTION_SCHEMA = (
+    "arg1_norm string, rel_norm string, arg2_norm string, url string,"
+    "sent_id long, tokens array<string>, pos_tags array<string>,"
+    "chunk_tags array<string>, arg1_start int, arg1_end int,"
+    "rel_start int, rel_end int, arg2_start int, arg2_end int,"
+    "arg1_text string, rel_text string, arg2_text string,"
+    "confidence double, corpus string"
+)
+
+
+def _extraction_rows(rng, keys):
+    """1-9 rows per group key; three distinct sentences per group, so
+    most groups have duplicates to drop."""
     rows = []
-    for g in range(40):
-        key = (f"arg{g % 7}", f"rel{g % 5}", f"obj{g}")
+    for g, key in enumerate(keys):
         for i in range(rng.randint(1, 9)):
             toks = ["Acme", "acquired", f"Globex{i % 3}", "."]
             rows.append((
@@ -94,27 +101,56 @@ def test_instance_dedup_batched_matches_grouped(spark):
                 0, 1, 1, 2, 2, 3, toks[0], toks[1], toks[2],
                 round(rng.random(), 3), "cc",
             ))
-    schema = (
-        "arg1_norm string, rel_norm string, arg2_norm string, url string,"
-        "sent_id long, tokens array<string>, pos_tags array<string>,"
-        "chunk_tags array<string>, arg1_start int, arg1_end int,"
-        "rel_start int, rel_end int, arg2_start int, arg2_end int,"
-        "arg1_text string, rel_text string, arg2_text string,"
-        "confidence double, corpus string"
-    )
-    df = spark.createDataFrame(rows, schema)
+    return rows
+
+
+def _batched_and_grouped(spark, rows):
+    """(dedup_instances rows, groupBy().applyInPandas rows), both with
+    a tiny maxRecordsPerBatch so groups SPAN Arrow batches."""
+    df = spark.createDataFrame(rows, _EXTRACTION_SCHEMA)
     reference = df.groupBy("arg1_norm", "rel_norm", "arg2_norm").applyInPandas(
         lambda pdf: instance_dedup._dedup_one_group(pdf), schema=df.schema
     )
-    key = lambda r: tuple(str(v) for v in r)
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         got = instance_dedup.dedup_instances(df).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    assert sorted(map(key, got)) == sorted(map(key, reference.collect()))
+    return got, reference.collect()
+
+
+def _row_key(r):
+    return tuple(str(v) for v in r)
+
+
+def test_instance_dedup_batched_matches_grouped(spark):
+    """The r6 mapInPandas rewrite must equal groupBy().applyInPandas —
+    including groups that SPAN Arrow batches (forced with a tiny
+    maxRecordsPerBatch)."""
+    keys = [(f"arg{g % 7}", f"rel{g % 5}", f"obj{g}") for g in range(40)]
+    rows = _extraction_rows(random.Random(13), keys)
+    got, reference = _batched_and_grouped(spark, rows)
+    assert sorted(map(_row_key, got)) == sorted(map(_row_key, reference))
     # and every group with a duplicate-free sentence keeps >= 1 row
     kept_keys = {(r["arg1_norm"], r["rel_norm"], r["arg2_norm"]) for r in got}
     all_keys = {(r[0], r[1], r[2]) for r in rows}
     assert kept_keys == all_keys
+
+
+def test_instance_dedup_keeps_null_key_groups(spark):
+    """A null key is a group like any other: its rows are deduplicated
+    once, as groupBy().applyInPandas does, not dropped. The batch's
+    last group and the groups before it can both have null keys."""
+    keys = [(None if g % 4 == 0 else f"arg{g % 7}", f"rel{g % 5}",
+             None if g % 6 == 0 else f"obj{g % 9}") for g in range(40)]
+    rows = _extraction_rows(random.Random(17), keys)
+    got, reference = _batched_and_grouped(spark, rows)
+    assert sorted(map(_row_key, got)) == sorted(map(_row_key, reference))
+    null_keys = {k for k in keys if None in k}
+    kept = [r for r in got if (r["arg1_norm"], r["rel_norm"], r["arg2_norm"]) in null_keys]
+    in_null = [r for r in rows if (r[0], r[1], r[2]) in null_keys]
+    # present, deduplicated (three distinct sentences per group at most)
+    assert {(r["arg1_norm"], r["rel_norm"], r["arg2_norm"]) for r in kept} == null_keys
+    assert len(kept) < len(in_null)
+    assert len({_row_key(r) for r in kept}) == len(kept)
