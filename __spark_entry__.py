@@ -503,7 +503,7 @@ def _dedup_ngram_jaccard(spark, sf):
 
 def _dedup_clusters(spark, sf):
     pairs = D.minhash_lsh_pairs(_t(spark, sf, "documents"), num_hashes=8, bands=4)
-    return D.dup_clusters(pairs)
+    return D.dup_clusters_twostar(pairs)
 
 
 def _dedup_simhash(spark, sf):
@@ -609,7 +609,7 @@ def _dedup_canonical(spark, sf):
     doc_id tiebreak — clusters in, deduplicated-corpus decision out."""
     docs = _t(spark, sf, "documents")
     pairs = D.minhash_lsh_pairs(docs, num_hashes=8, bands=4)
-    return D.canonical_docs(docs, D.dup_clusters(pairs))
+    return D.canonical_docs(docs, D.dup_clusters_twostar(pairs))
 
 
 def _kg_entity_aliases(spark, sf):
@@ -980,15 +980,6 @@ def _kg_pagerank(spark, sf):
 
     linked, _ = _synth_linked(spark)
     return pagerank(edge_table(spo_table(linked)), iterations=3)
-
-
-def _dedup_clusters_twostar(spark, sf):
-    """Connected components via alternating large-star/small-star
-    (dedup.dup_clusters_twostar) over the same LSH candidate pairs as
-    dedup_clusters — identical labeling contract, O(log n) rounds on
-    any graph shape, same recursive-CTE oracle."""
-    pairs = D.minhash_lsh_pairs(_t(spark, sf, "documents"), num_hashes=8, bands=4)
-    return D.dup_clusters_twostar(pairs)
 
 
 def _kg_components(spark, sf):
@@ -1593,7 +1584,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "web_host_stats": _web_host_stats,
         "dsir_importance": _dsir_importance,
         "host_quota_sample": _host_quota_sample,
-        "dedup_clusters_twostar": _dedup_clusters_twostar,
         "kg_degree_stats": _kg_degree_stats,
         "kg_pagerank": _kg_pagerank,
         "kg_components": _kg_components,
@@ -1855,10 +1845,9 @@ _MINHASH_PAIRS_SQL = f"""
             SELECT doc_a, doc_b FROM pairs_bands
 """
 
-# Connected-components ground truth over the MinHash candidate pairs —
-# shared by dedup_clusters (min-label propagation) and
-# dedup_clusters_twostar (alternating large-star/small-star): both
-# implement (doc_id, cluster_id = component minimum).
+# Connected-components ground truth over the MinHash candidate pairs
+# for dedup_clusters and dedup_canonical (dedup.dup_clusters_twostar):
+# (doc_id, cluster_id = component minimum).
 _CLUSTERS_SQL = f"""
     WITH RECURSIVE pairs AS (
     {_MINHASH_PAIRS_SQL}
@@ -2654,9 +2643,6 @@ def oracle_sql() -> dict[str, str]:
             FROM w, m WHERE w.window_start + INTERVAL 1 HOUR <= m.wm
         """,
         "dedup_clusters": _CLUSTERS_SQL,
-        # identical ground truth — twostar and propagation share the
-        # (doc_id, cluster_id = component min) contract by construction
-        "dedup_clusters_twostar": _CLUSTERS_SQL,
         "dedup_simhash": simhash_select,
         # Full mirror of dedup.simhash_banded_pairs incl. the shared
         # star-cap (r4 VERDICT #2): 4-bit bands have only 16 values, so

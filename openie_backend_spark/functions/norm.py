@@ -1,11 +1,11 @@
 """Vectorized pandas-UDF wrappers for the normalization core (§2.10
 scalar UDF surface).
 
-The batch pipeline computes these inside the fused extraction pass
-(``operators/extract.py``) — one Python crossing for everything. These
-standalone wrappers exist for ad-hoc use: normalizing query text,
-re-keying legacy tab data loaded via ``sources/tab.py``, or healing
-normalization drift (G11 fracture).
+The batch pipeline computes these keys inside the fused extraction
+pass (``operators/extract.py``) — one Python crossing for everything.
+These standalone wrappers exist for ad-hoc use: re-keying legacy tab
+data loaded via ``sources/tab.py``, or healing normalization drift
+(G11 fracture).
 """
 
 from __future__ import annotations
@@ -16,14 +16,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from openie_backend_spark.nlp import stemmer
-
-
-@pandas_udf(StringType())
-def lnrm_udf(text: pd.Series) -> pd.Series:
-    """CrossWikis lnrm with full unicode folding (the builtin-SQL
-    variant in operators.link covers ASCII; this one handles
-    diacritics via NFD)."""
-    return text.map(lambda t: stemmer.lnrm(t) if t is not None else None)
 
 
 def _key_udf(fn):

@@ -1,15 +1,11 @@
-"""Explicit skew handling: salted joins and salted aggregation.
+"""Explicit skew handling: salted joins.
 
 The reference salts short (hot) argNorm keys with a random 0-99 prefix
 before its type-attach join (``TypeAttacher.scala:20,25``). Spark's
 AQE skew-join splitting (enabled in ``session.py``) usually makes this
-unnecessary, but two cases still want explicit salt at 10^12 scale:
-
-* joins AQE cannot split (e.g. a broadcast side that just exceeded the
-  threshold and fell back to shuffle with a monster key);
-* two-phase aggregation over a power-law key (pre-aggregate on
-  (key, salt), then merge) when a single reducer would otherwise hold
-  a mega-group.
+unnecessary, but joins AQE cannot split still want explicit salt at
+10^12 scale (e.g. a broadcast side that just exceeded the threshold
+and fell back to shuffle with a monster key).
 
 Salts are deterministic (hash of a disambiguator column), never
 ``rand()`` — reruns reproduce (SURVEY §4 custom-work item 3).
@@ -47,15 +43,3 @@ def salted_join(
     )
     out = l_salted.join(r_exploded, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def salted_count(df: DataFrame, key: str, buckets: int = 32) -> DataFrame:
-    """Two-phase count over a skewed key: partial count on (key, salt)
-    then merge — the map-side combine Spark already does for count, but
-    explicit for aggregations that are NOT partial-aggregable (e.g.
-    exact distinct lists) where the same pattern applies."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(buckets))
-    )
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias("count"))

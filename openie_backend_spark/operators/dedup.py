@@ -149,9 +149,9 @@ def bucketed_pairs(
     signature-equal edges (distance 0 — rerank-proof); only the
     cross-group rep edges are speculative. And unlike a similarity-
     sorted CHAIN (the other O(k) candidate), the graph diameter stays
-    ≤ 4, so ``dup_clusters``' bounded label propagation converges in
-    O(1) rounds even on a million-member boilerplate bucket, where a
-    chain's diameter would grow with the bucket.
+    ≤ 4 even on a million-member boilerplate bucket, where a chain's
+    diameter would grow with the bucket; ``dup_clusters_twostar``
+    labels it in a few rounds either way.
 
     ``order_col`` should be the full signature (callers pass the
     simhash long, the concatenated MinHash signature, the hyperplane
@@ -531,180 +531,105 @@ def embedding_neardup_pairs(
     )
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 12,
-) -> DataFrame:
-    """Connected components over candidate-pair edges → duplicate
-    clusters: (doc_id, cluster_id = minimum member id).
-
-    Alternating large-star / small-star style label propagation
-    expressed as DataFrame joins: every node repeatedly adopts the
-    minimum label among itself and its neighbors until a fixpoint.
-    Iterations are O(diameter); near-dup clusters are shallow (stars
-    from the LSH bucket representative), so convergence is fast. Each
-    iteration is one join + one aggregation — no driver-side graph.
-    The fixpoint test is one count of the labels that changed in the
-    round. It has no LIMIT, so every round of every pass reuses the
-    same generated classes.
-    """
-    # materialize the edge set ONCE: `pairs` is typically the full LSH
-    # candidate pipeline, and it is referenced twice here (the union of
-    # both orientations) and then once per propagation round — without
-    # the checkpoint the signature/banding pipeline re-executes
-    # 2 + 2·rounds times (measured ~150 CPU-s on the sf0.1 LSH pairs,
-    # vs ~20 with the checkpoint; guide §3.3 plan truncation)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # checkpoint BEFORE the fixpoint probe so the probe's join
-        # reads the materialized labels instead of re-running the
-        # round's join+aggregation a second time
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        ).localCheckpoint(eager=True)
-        # fixpoint check: how many labels changed? A full count, not a
-        # limit-1 probe: Spark names every LIMIT's counter from a global
-        # id, so a LIMIT plan never hits the codegen cache and each round
-        # of each pass would recompile it
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("n"), "node")
-            .filter(F.col("o.label") != F.col("n.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Labels are min-monotone, so a cap hit yields over-split (never
-        # merged-wrong) clusters — but silent truncation is the failure
-        # mode BENCH/GRAPH.md measures: a 13-node chain already needs
-        # more than the default 12 rounds. Surface it; chain-prone
-        # graphs should use dup_clusters_twostar (O(log n) rounds).
-        import warnings
-
-        warnings.warn(
-            f"dup_clusters hit max_iterations={max_iterations} before the "
-            "fixpoint; labels may be over-split. Use dup_clusters_twostar "
-            "for graphs with unknown or large diameter.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round (Kiveris et al. 2014, Alg. 2): for every
+    """One large-star step (Kiveris et al. 2014, Alg. 2): for every
     node u, connect each strictly-larger neighbor to the minimum of
-    u's neighborhood (including u itself). Input/output: undirected
-    edge sets as (u, v) rows; symmetrization happens here."""
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).filter(F.col("u") != F.col("v"))
-    mins = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
+    u's neighborhood, u included. Input: edges (u, v) oriented u > v,
+    no self-loops. Output: the same orientation, possibly with
+    duplicate rows (``_small_star`` removes them)."""
+    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
-        sym.join(mins, "u")
+        sym.withColumn("m", F.min("v").over(Window.partitionBy("u")))
         .filter(F.col("v") > F.col("u"))
-        .select(
-            F.col("v").alias("u"),
-            F.least(F.col("u"), F.col("nbr_min")).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .select(F.col("v").alias("u"), F.least("u", "m").alias("v"))
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round (Kiveris et al. 2014, Alg. 3): orient each
-    edge from the larger to the smaller endpoint, then connect every
-    smaller neighbor — and u itself — to the minimum of that group.
-    Since every grouped v < u, the group minimum is min(N≤(u) ∪ {u})."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("nbr_min"))
+    """One small-star step (Kiveris et al. 2014, Alg. 3): for every
+    node u, connect its smaller neighbors, and u itself, to the
+    smallest of them. Input: edges (u, v) oriented u > v, duplicates
+    allowed. Output: the same orientation, distinct, no self-loops."""
+    with_min = edges.withColumn("m", F.min("v").over(Window.partitionBy("u")))
     return (
-        oriented.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("nbr_min").alias("v"))
-        .union(mins.select("u", F.col("nbr_min").alias("v")))
+        with_min.select(F.explode(F.array(
+            F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+        )).alias("e"))
+        .select("e.u", "e.v")
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
 
 
-def dup_clusters_twostar(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the scale path for cluster labeling.
+# Large-star + small-star rounds dup_clusters_twostar may run. A
+# 1024-node chain, the deepest shape, needs 10 (BENCH/GRAPH.md).
+MAX_STAR_ROUNDS = 20
 
-    ``dup_clusters`` (min-label propagation) needs O(diameter) rounds:
-    fine for the shallow star-shaped clusters LSH banding emits, but a
+
+def _non_star_nodes(edges: DataFrame) -> int:
+    """Count the nodes that keep ``edges`` (oriented u > v) from being
+    a star forest: a node with an out-edge and any other edge, in or
+    out. Zero means every edge points from a leaf straight at its
+    root. One union, one groupBy and one count, with no LIMIT, so every
+    check of every pass reuses the same generated classes."""
+    ends = edges.select(F.col("u").alias("node"), F.lit(1).alias("out")).union(
+        edges.select(F.col("v").alias("node"), F.lit(0).alias("out"))
+    )
+    return (
+        ends.groupBy("node")
+        .agg(F.sum("out").alias("n_out"), F.count(F.lit(1)).alias("n"))
+        .filter((F.col("n_out") > 0) & (F.col("n") > 1))
+        .count()
+    )
+
+
+def dup_clusters_twostar(pairs: DataFrame) -> DataFrame:
+    """Connected components over candidate-pair edges → duplicate
+    clusters: (doc_id, cluster_id = minimum member id).
+
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). It converges in
+    O(log² n) rounds on ANY graph shape (O(log n) in practice), so a
     transitive near-dup CHAIN (A~B~C~…, each pair just over threshold)
-    has diameter O(n) and would run the propagation loop to its
-    iteration cap. Two-star provably converges in O(log² n) rounds on
-    ANY graph shape (O(log n) in practice) — each round is one
-    groupBy-min plus one equality join, all map-side-combinable, no
-    driver-side graph state. The fixpoint test is one count per round
-    of the symmetric ``exceptAll`` difference between the old and new
-    edge multisets, with no LIMIT, so every round of every pass reuses
-    the same generated classes (as in ``dup_clusters``). At
-    convergence the edge set is a star forest where every node points
-    at its component minimum.
+    costs a few rounds, not one per hop. A round is two window mins
+    over each node's edges and one distinct: no join, and each step
+    reads its input once. There is no driver-side graph state. A
+    node's edges share one task, so a hub's degree sets the largest
+    task of a round.
 
-    Output contract matches ``dup_clusters`` exactly — (doc_id,
-    cluster_id = minimum member id) — so the two are interchangeable
-    and equivalence-tested (tests/test_operators_spark.py).
+    The edges are oriented once, larger id → smaller, and every round
+    keeps that orientation. Before each round one count
+    (``_non_star_nodes``) checks the output contract directly: the
+    loop stops at the first star forest. There each root is the
+    smallest id of its star, and since both star operations preserve
+    the input's components, it is the component minimum. LSH-verified
+    pairs are usually two-node stars already and run 0 rounds.
+
+    Raises ``RuntimeError`` after ``MAX_STAR_ROUNDS`` rounds: edges
+    that are not yet a star forest can give a document two labels.
     """
+    # materialize the edge set once: ``pairs`` is usually the whole LSH
+    # candidate pipeline, which every check and round would re-run
     edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        pairs.select(
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
+        )
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        # Star forest fixpoint: small-star output is already oriented
-        # large→small, so set equality is plain exceptAll both ways. One
-        # count of the symmetric multiset difference is zero exactly when
-        # both differences are empty, and has no LIMIT (see dup_clusters).
-        changed = (
-            new_edges.exceptAll(edges)
-            .union(edges.exceptAll(new_edges))
-            .count()
-        )
-        edges = new_edges
-        if changed == 0:
-            break
-    roots = edges.select(F.col("v").alias("node")).exceptAll(
-        edges.select(F.col("u").alias("node"))
-    ).distinct()
+    rounds = 0
+    while _non_star_nodes(edges):
+        if rounds == MAX_STAR_ROUNDS:
+            raise RuntimeError(
+                f"dup_clusters_twostar: no star forest after {rounds} rounds")
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        rounds += 1
     return (
         edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-        .union(roots.select(F.col("node").alias("doc_id"), F.col("node").alias("cluster_id")))
+        .union(edges.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id")))
         .distinct()
     )
 
@@ -874,9 +799,8 @@ def canonical_docs(
     standard "longest member" heuristic (near-dup clusters are usually
     a full document plus truncated/boilerplate-wrapped variants; the
     longest is the most complete), with ``doc_id`` as the
-    deterministic tiebreak. Composes with either clustering operator
-    (``dup_clusters`` / ``dup_clusters_twostar`` — same labeling
-    contract).
+    deterministic tiebreak. ``clusters`` is the
+    ``dup_clusters_twostar`` labeling, (doc_id, cluster_id).
 
     Output: one row per clustered document — (doc_id, cluster_id,
     n_members, text_len, keep); downstream drops ``keep = false`` rows

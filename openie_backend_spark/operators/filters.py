@@ -11,10 +11,10 @@ Spark mapping of:
 * F3 group filter (``:69-75``): all norms non-empty and ≥ 2 instances;
 * F4 extreme-precision filter
   (``ScoobiReVerbGroupExtremeFilter.scala:56,65-91``);
-* F5 frequency filter (``ScoobiEntityLinker.scala:161,172-197``);
-* F7 entity stoplist (broadcast anti join,
-  ``backend/.../ExtractionGroupFetcher.scala:119-133``);
-* F9 Bernoulli sample (``hadoop/.../FileSampler.scala:52-54``).
+* F5 frequency filter (``ScoobiEntityLinker.scala:161,172-197``).
+
+The F7 entity stoplist is the typer's broadcast left-anti join
+(``typer._rel_entities``).
 """
 
 from __future__ import annotations
@@ -194,24 +194,3 @@ def extreme_precision_filter(
 def frequency_filter(groups: DataFrame, min_freq: int = 1, max_freq: int = 100000) -> DataFrame:
     """F5: pre-linking cost control by group size."""
     return groups.filter(F.col("size").between(min_freq, max_freq))
-
-
-def entity_stoplist_filter(groups: DataFrame, stoplist: DataFrame, side: str) -> DataFrame:
-    """F7: null-out the entity link when its fbid is stoplisted —
-    broadcast left join + conditional, the set-based form of the
-    reference's per-row HashSet check."""
-    col = f"{side}_entity"
-    joined = groups.join(
-        F.broadcast(stoplist.select(F.col("fbid").alias("_stop_fbid"))),
-        F.col(f"{col}.fbid") == F.col("_stop_fbid"),
-        "left",
-    )
-    return joined.withColumn(
-        col,
-        F.when(F.col("_stop_fbid").isNotNull(), F.lit(None)).otherwise(F.col(col)),
-    ).drop("_stop_fbid")
-
-
-def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """F9."""
-    return df.sample(fraction=fraction, seed=seed)

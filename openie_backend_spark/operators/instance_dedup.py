@@ -10,9 +10,10 @@ tuple (``:20``) and no (token, relative-position) pair has been seen
 deduplicated.
 
 The scan is inherently sequential per group (state = seen token/pos
-counts), so this is a grouped ``applyInPandas`` — the one UDAF-shaped
-Python operator in the engine. Groups are independent; the shuffle is
-the same group key used everywhere else.
+counts), so it runs in pandas: one batched ``mapInPandas`` call per
+Arrow batch over key-sorted partitions (``dedup_instances``). Groups
+are independent; the shuffle is the same group key used everywhere
+else.
 """
 
 from __future__ import annotations
@@ -122,23 +123,3 @@ def dedup_instances(extractions: DataFrame) -> DataFrame:
             yield _dedup_one_group(carry)
 
     return keyed.mapInPandas(_batched, schema=schema)
-
-
-def dedup_grouped(groups: DataFrame) -> DataFrame:
-    """Same semantics applied to already-grouped REGs: explode the
-    instances array, dedup, regroup (used on the serving path,
-    ``ParallelExtractionGroupFetcher.scala:174-179``)."""
-    exploded = groups.select(*GROUP_KEY, F.explode("instances").alias("instance"))
-    flat = exploded.select(*GROUP_KEY, F.col("instance.*"))
-    schema = flat.schema
-    deduped = flat.groupBy(*GROUP_KEY).applyInPandas(
-        lambda pdf: _dedup_one_group(pdf), schema=schema
-    )
-    inst_cols = [c for c in deduped.columns if c not in GROUP_KEY]
-    return (
-        deduped.groupBy(*GROUP_KEY)
-        .agg(
-            F.collect_list(F.struct(*inst_cols)).alias("instances"),
-            F.count(F.lit(1)).alias("size"),
-        )
-    )

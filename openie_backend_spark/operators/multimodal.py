@@ -87,13 +87,6 @@ def _decode_image(payload: bytes, dim: int = 16) -> np.ndarray:
     return rng.random(dim, dtype=np.float64).astype(np.float32)
 
 
-def _sample_frames(payload: bytes, n_frames: int = 4) -> list[bytes]:
-    """STUB FRAME SAMPLER — deterministic fake video frame sampling."""
-    if payload is None:
-        raise NotImplementedError("real frame sampling requires a video codec")
-    return [hashlib.md5(payload + bytes([i])).digest() for i in range(n_frames)]
-
-
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """media → (media_id, feature vector, payload size). One Arrow
     pass; metadata columns pruned away before the Python stage."""

@@ -82,11 +82,3 @@ def iter_gold_extractions(path: str = GOLD_EXTRACTIONS) -> Iterator[GoldExtracti
                 chunks.split(" "),
                 None if url == "None" else url,
             )
-
-
-def gold_sentences() -> list[tuple[list[str], list[str], list[str]]]:
-    """Distinct chunked sentences from the gold file (dedup by word layer)."""
-    seen: dict[str, tuple[list[str], list[str], list[str]]] = {}
-    for g in iter_gold_extractions():
-        seen.setdefault(" ".join(g.tokens), (g.tokens, g.pos, g.chunks))
-    return list(seen.values())

@@ -58,11 +58,12 @@ def windowed_event_counts(
     count: 64 stores × per-batch snapshot files for a fixture-sized
     stream (measured ~50 CPU-s of pure state/task overhead at sf0.1).
     Size it to ingest volume per deployment; it must stay constant for
-    the lifetime of a checkpoint, which is why it is set here (before
-    the first start) and restored after."""
-    prev_parts = None
+    the lifetime of a checkpoint, which is why it is set here. The
+    stream then runs on ``spark.newSession()``: same SparkContext, its
+    own SQL conf, so the caller's queries keep their shuffle
+    partitions while it runs."""
     if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark = spark.newSession()
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -81,19 +82,15 @@ def windowed_event_counts(
             "total_value",
         )
     )
-    try:
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    (
+        stream.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def read_windowed_counts(spark: SparkSession, out_dir: str) -> DataFrame:

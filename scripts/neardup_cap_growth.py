@@ -90,7 +90,7 @@ row's linear 99/cluster. (Identical clusters can share 16-bit band
 values, so capped totals can exceed k×99 by cross-group rep pairs
 — bounded by the same cap; exact per-path counts are pinned by
 `tests/test_operators_spark.py::test_banded_pairs_cap_is_linear`.)
-Connectivity for `dup_clusters` labeling survives the cap (same test:
+Connectivity for `dup_clusters_twostar` labeling survives the cap (same test:
 one component, min-id label).
 """
     with open("/root/repo/BENCH/NEARDUP.md", "a") as fh:

@@ -4,7 +4,7 @@ Spark keeps the classes it generates and compiles with Janino in one
 LRU cache per JVM, keyed by their source. A second pass over the same
 plan shapes must hit that cache for every class. Two things used to
 defeat it: a cache smaller than one pass's classes (the default holds
-100), and the fixpoint loops' ``limit(1)`` probes, whose generated
+100), and the components loop's ``limit(1)`` probes, whose generated
 source names the LIMIT counter from a global id and so never repeats.
 
 The passes run with adaptive execution off. With it on, Spark re-plans
@@ -34,8 +34,11 @@ def _compiles(spark) -> int:
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    """120 documents of 40 random words; 12 of them are copies of
-    another document with one word swapped (trigram Jaccard ~0.86)."""
+    """122 documents of 40 random words. 12 of them are copies of
+    another document with one word swapped (trigram Jaccard ~0.86).
+    The last two extend a chain A-B-C from d000: B swaps word 5 of A,
+    C swaps word 30 of B, so A-C falls below Jaccard 0.8 and A-B-C is
+    no star: the components loop has to run a round."""
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(400)]
     texts = [" ".join(rng.choice(vocab) for _ in range(40)) for _ in range(108)]
@@ -43,32 +46,35 @@ def docs(spark):
         words = texts[i * 5].split()
         words[20] = "planted"
         texts.append(" ".join(words))
+    words = texts[0].split()
+    for pos in (5, 30):
+        words[pos] = f"chained{pos}"
+        texts.append(" ".join(words))
     return spark.createDataFrame(
         [(f"d{i:03d}", t) for i, t in enumerate(texts)], "doc_id string, text string")
 
 
-def _pass(docs, clusters):
+def _pass(docs):
     cand = D.minhash_lsh_pairs(docs)
     verified = D.ngram_jaccard_pairs(docs, threshold=0.8, candidates=cand)
-    return sorted(tuple(r) for r in clusters(verified).collect())
+    return sorted(tuple(r) for r in D.dup_clusters_twostar(verified).collect())
 
 
-@pytest.mark.parametrize("clusters", [D.dup_clusters_twostar, D.dup_clusters],
-                         ids=["twostar", "propagation"])
-def test_second_pass_compiles_nothing(spark, docs, clusters):
+def test_second_pass_compiles_nothing(spark, docs):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         c0 = _compiles(spark)
-        first = _pass(docs, clusters)
+        first = _pass(docs)
         c1 = _compiles(spark)
-        second = _pass(docs, clusters)
+        second = _pass(docs)
         c2 = _compiles(spark)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert second == first
-    # the planted copies are found, so the fixpoint loop ran its rounds
     assert {doc for doc, label in first if doc != label} >= {
         f"d{108 + i:03d}" for i in range(12)}
+    # C reaches A only through B: the loop ran and found the minimum
+    assert dict(first)["d121"] == "d000"
     assert c2 - c1 == 0, (
         f"second pass compiled {c2 - c1} classes (first pass: {c1 - c0})")

@@ -327,6 +327,29 @@ def test_windowed_counts_drop_late_rows_across_passes(spark, tmp_path):
     assert second[("2024-06-01 10:00:00", "view")] == (2, 3.0)
 
 
+def test_windowed_counts_state_partitions_leave_caller_conf(spark, tmp_path):
+    """``state_partitions`` sizes the stream's state stores without
+    touching the caller's session-wide shuffle partitions."""
+    from datetime import datetime
+
+    from openie_backend_spark.streaming.windows import windowed_event_counts
+
+    landing = str(tmp_path / "landing")
+    ck = tmp_path / "ck"
+    spark.createDataFrame(
+        [(1, datetime(2024, 6, 1, 1, 10), 1, "click", 1.0, "{}")],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string",
+    ).write.parquet(landing)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    windowed_event_counts(spark, landing, str(tmp_path / "out"), str(ck),
+                          state_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before != "3"
+    stores = sorted(p.name for p in (ck / "state" / "0").iterdir()
+                    if p.name.isdigit())
+    assert stores == ["0", "1", "2"]
+
+
 def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionizer == batch window sessionizer
     on the same data, minus each user's final (still-open) session.

@@ -509,7 +509,7 @@ def test_banded_pairs_cap_is_linear(spark):
     vcap = D.embedding_neardup_pairs(vecs, threshold=0.0, max_full_bucket=16)
     assert vcap.count() == 39
     # star pairs keep the cluster connected: one component, min-id label
-    labels = D.dup_clusters(vcap.select(
+    labels = D.dup_clusters_twostar(vcap.select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")))
     assert labels.select("cluster_id").distinct().count() == 1
 
@@ -531,7 +531,7 @@ def test_group_star_cap_survives_exact_rerank(spark):
     pairs = D.simhash_banded_pairs(docs, bits=16, bands=4, max_hamming=0,
                                    max_full_bucket=4)
     surviving = pairs.filter((F.col("doc_a") >= 100) & (F.col("doc_b") >= 100))
-    labels = D.dup_clusters(surviving)
+    labels = D.dup_clusters_twostar(surviving)
     dup_labels = labels.filter(F.col("doc_id") >= 100).collect()
     assert len(dup_labels) == 6  # every duplicate doc kept an edge
     assert {r["cluster_id"] for r in dup_labels} == {100}
@@ -759,30 +759,42 @@ def _pairs_df(spark, pairs):
     return spark.createDataFrame([tuple(p) for p in pairs], schema)
 
 
-def _clusters_of(df):
-    rows = df.collect()
-    out = {}
-    for r in rows:
-        out.setdefault(r["cluster_id"], set()).add(r["doc_id"])
-    return {frozenset(v) for v in out.values()}, {r["doc_id"]: r["cluster_id"] for r in rows}
+def _chain(n):
+    return [(f"w{i:02d}", f"w{i + 1:02d}") for i in range(n - 1)]
 
 
-def test_twostar_matches_propagation_on_chain(spark):
-    """A transitive near-dup CHAIN is the adversarial shape for
-    min-label propagation (diameter = n); two-star must produce the
-    identical labeling in O(log n) rounds."""
+def _labels(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+
+def _union_find_labels(pairs):
+    """doc -> component minimum, by union-find over ``pairs``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_twostar_matches_union_find_on_chain(spark):
+    """A transitive near-dup CHAIN (diameter = n) still gets one label,
+    the component minimum, in O(log n) rounds."""
     from openie_backend_spark.operators import dedup as D
 
-    chain = [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(11)]
-    pairs = _pairs_df(spark, chain)
-    a_sets, a_map = _clusters_of(D.dup_clusters(pairs, max_iterations=20))
-    b_sets, b_map = _clusters_of(D.dup_clusters_twostar(pairs))
-    assert a_sets == b_sets == {frozenset(f"d{i:02d}" for i in range(12))}
-    assert a_map == b_map  # both label by component minimum
-    assert set(b_map.values()) == {"d00"}
+    chain = _chain(12)
+    labels = _labels(D.dup_clusters_twostar(_pairs_df(spark, chain)))
+    assert labels == _union_find_labels(chain)
+    assert set(labels.values()) == {"w00"}
 
 
-def test_twostar_matches_propagation_random_graphs(spark):
+def test_twostar_matches_union_find_random_graphs(spark):
     import random
 
     from openie_backend_spark.operators import dedup as D
@@ -790,26 +802,22 @@ def test_twostar_matches_propagation_random_graphs(spark):
     rng = random.Random(42)
     for trial in range(3):
         n = 30
+        # both orientations, sometimes of the same edge
         edges = {
-            (f"n{min(a, b):02d}", f"n{max(a, b):02d}")
+            (f"n{a:02d}", f"n{b:02d}")
             for a, b in (
                 (rng.randrange(n), rng.randrange(n)) for _ in range(25)
             )
             if a != b
         }
-        pairs = _pairs_df(spark, sorted(edges))
-        a_sets, a_map = _clusters_of(D.dup_clusters(pairs, max_iterations=30))
-        b_sets, b_map = _clusters_of(D.dup_clusters_twostar(pairs))
-        assert a_sets == b_sets, f"trial {trial}"
-        assert a_map == b_map, f"trial {trial}"
+        pairs = sorted(edges)
+        labels = _labels(D.dup_clusters_twostar(_pairs_df(spark, pairs)))
+        assert labels == _union_find_labels(pairs), f"trial {trial}"
 
 
 def test_twostar_empty_and_single_pair(spark):
     from openie_backend_spark.operators import dedup as D
 
-    assert D.dup_clusters_twostar(_pairs_df(spark, [("a", "b")])).collect() == [
-        ("a", "a"), ("b", "a"),
-    ] or True  # order-free check below
     rows = {tuple(r) for r in D.dup_clusters_twostar(_pairs_df(spark, [("a", "b")])).collect()}
     assert rows == {("a", "a"), ("b", "a")}
     empty = _pairs_df(spark, [])
@@ -961,20 +969,24 @@ def test_snapshot_diff_statuses(spark):
     }  # ("e", unchanged) dropped
 
 
-def test_dup_clusters_warns_on_iteration_cap(spark):
-    import warnings
-
+def test_twostar_raises_at_round_cap(spark, monkeypatch):
+    """A 17-node chain needs 4 rounds; with 2 allowed, the unconverged
+    edges would give some documents two labels, so it raises."""
     from openie_backend_spark.operators import dedup as D
 
-    chain = _pairs_df(spark, [(f"w{i:02d}", f"w{i + 1:02d}") for i in range(8)])
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        D.dup_clusters(chain, max_iterations=2).collect()
-    assert any("max_iterations" in str(w.message) for w in caught)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        D.dup_clusters(chain, max_iterations=20).collect()
-    assert not any("max_iterations" in str(w.message) for w in caught)
+    monkeypatch.setattr(D, "MAX_STAR_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="no star forest"):
+        D.dup_clusters_twostar(_pairs_df(spark, _chain(17)))
+
+
+def test_twostar_chain_converges_in_log_rounds(spark, monkeypatch):
+    """A 64-node chain reaches a star forest in 6 rounds."""
+    from openie_backend_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "MAX_STAR_ROUNDS", 6)
+    labels = _labels(D.dup_clusters_twostar(_pairs_df(spark, _chain(64))))
+    assert len(labels) == 64
+    assert set(labels.values()) == {"w00"}
 
 
 def test_quantize_embeddings_bounds_and_roundtrip(spark):

@@ -47,6 +47,7 @@ def test_repetition_signals(spark):
         (2, "w x y z"),            # all distinct
         (3, ""),                   # degenerate
         (4, "solo"),               # no bigram
+        (5, None),                 # no text
     ])
     rows = {r["doc_id"]: r for r in d.select(
         "doc_id",
@@ -60,6 +61,7 @@ def test_repetition_signals(spark):
     assert rows[2]["dbf"] == 0.0
     for empty in (3, 4):
         assert rows[empty]["tbf"] == 0.0 and rows[empty]["dbf"] == 0.0
+    assert rows[5]["tbf"] == 0.0
 
 
 # ------------------------------------------------------------------ PII
